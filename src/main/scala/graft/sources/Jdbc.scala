@@ -113,6 +113,36 @@ object ScanSqlLog {
   def clear(): Unit = q.clear()
 }
 
+/** One remote query's lifetime, shared by every read path: borrows a
+  * connection, logs `sql` to [[ScanSqlLog]], runs it with the scan's
+  * `fetchsize`, and returns the borrow on [[close]]. A failing
+  * `createStatement` or `executeQuery` closes it too: a reader whose
+  * constructor throws never reaches Spark, so nothing else could. */
+private[sources] final class RemoteCursor(opts: RemoteOptions, sql: String)
+    extends AutoCloseable {
+  private val conn = GraftConnections.open(opts)
+  private var stmt: java.sql.Statement = _
+  val rs: ResultSet =
+    try {
+      stmt = conn.createStatement()
+      stmt.setFetchSize(opts.fetchSize)
+      ScanSqlLog.record(sql)
+      stmt.executeQuery(sql)
+    } catch { case t: Throwable => close(); throw t }
+
+  /** Closing the statement closes its result set (JDBC contract). */
+  override def close(): Unit =
+    try { if (stmt != null) stmt.close() } finally GraftConnections.close(conn)
+}
+
+private[sources] object RemoteCursor {
+  /** Run one query and read its result with `f` (the scalar probes). */
+  def query[T](opts: RemoteOptions, sql: String)(f: ResultSet => T): T = {
+    val c = new RemoteCursor(opts, sql)
+    try f(c.rs) finally c.close()
+  }
+}
+
 /** JSON-backed nested-struct decode — the Spark-native analogue of the
   * reference assembling Oracle's SdeGeometry object columns into an
   * Arrow StructArray (`connection/oracle.rs:528-650`,
@@ -272,37 +302,6 @@ object JsonStructDecode {
     case other => throw new IllegalArgumentException(
       s"JSON struct encode: unsupported field type $other")
   }
-
-  /** JSON document → external Row (Transform path: user code sees java
-    * values, not Catalyst ones). */
-  def parseExternal(s: String, st: StructType): org.apache.spark.sql.Row =
-    toExternalRow(mapper.readTree(s), st)
-
-  private def toExternalRow(node: JsonNode, st: StructType)
-      : org.apache.spark.sql.Row = {
-    if (!node.isObject) throw new IllegalArgumentException(
-      s"struct column payload is not a JSON object: ${node.getNodeType}")
-    val arr = new Array[Any](st.fields.length)
-    var i = 0
-    while (i < st.fields.length) {
-      val f = st.fields(i)
-      val n = node.get(f.name)
-      arr(i) = if (n == null || n.isNull) null else externalConvert(n, f.dataType)
-      i += 1
-    }
-    org.apache.spark.sql.Row.fromSeq(arr.toIndexedSeq)
-  }
-
-  private def externalConvert(n: JsonNode, dt: DataType): Any = dt match {
-    case StringType => n.asText()
-    case nested: StructType => toExternalRow(n, nested)
-    case ArrayType(et, _) =>
-      (0 until n.size()).map(i =>
-        if (n.get(i).isNull) null else externalConvert(n.get(i), et))
-    case d: DecimalType =>
-      BigDecimal(n.decimalValue()).setScale(d.scale, BigDecimal.RoundingMode.HALF_UP)
-    case _ => convert(n, dt)
-  }
 }
 
 object Jdbc {
@@ -452,13 +451,8 @@ object Jdbc {
   /** Exact row count with pushed filters (reference COUNT(1) pushdown,
     * `connection/mod.rs:97-118,454-512`). */
   def count(opts: RemoteOptions, filters: Seq[String]): Long =
-    GraftConnections.withConnection(opts) { c =>
-      val st = c.createStatement()
-      try {
-        val rs = st.executeQuery(opts.dialect.countQuery(opts.source, filters))
-        rs.next()
-        rs.getLong(1)
-      } finally st.close()
+    RemoteCursor.query(opts, opts.dialect.countQuery(opts.source, filters)) {
+      rs => rs.next(); rs.getLong(1)
     }
 
   /** Per-element Catalyst conversion for array decode (reference decodes
@@ -719,83 +713,6 @@ object Jdbc {
       }
       case other => throw new IllegalStateException(
         s"columnar decode for $other (guard with columnarSupported)")
-    }
-  }
-
-  /** External (Row-API) getter — used on the Transform path where user
-    * code sees java values, mirroring the reference transform operating
-    * on materialized batches (`transform.rs:86-167`). */
-  def externalGetter(f: RemoteField): (ResultSet, Int) => Any = {
-    import RemoteType._
-    f.tpe match {
-      case RBool => (rs, i) => { val v = rs.getBoolean(i); if (rs.wasNull()) null else v }
-      case RInt1 => (rs, i) => { val v = rs.getByte(i); if (rs.wasNull()) null else v }
-      case RInt2 | RUInt1 => (rs, i) => { val v = rs.getShort(i); if (rs.wasNull()) null else v }
-      case RInt4 | RUInt2 => (rs, i) => { val v = rs.getInt(i); if (rs.wasNull()) null else v }
-      case RInt8 | RUInt4 => (rs, i) => { val v = rs.getLong(i); if (rs.wasNull()) null else v }
-      case RUInt8 => (rs, i) => { val v = rs.getBigDecimal(i); if (v == null) null else BigDecimal(v) }
-      case RFloat4 => (rs, i) => { val v = rs.getFloat(i); if (rs.wasNull()) null else v }
-      case RFloat8 => (rs, i) => { val v = rs.getDouble(i); if (rs.wasNull()) null else v }
-      case RDecimal(p, s) if p <= DecimalType.MAX_PRECISION =>
-        (rs, i) => {
-          val v = rs.getBigDecimal(i)
-          if (v == null) null else BigDecimal(v.setScale(s, java.math.RoundingMode.HALF_UP))
-        }
-      case RDecimal(_, _) => (rs, i) => {
-        val v = rs.getBigDecimal(i); if (v == null) null else v.toPlainString
-      }
-      case c @ RDecimalClamp(_, _) => (rs, i) => { // clamp38: external form
-        val v = rs.getBigDecimal(i)
-        if (v == null) null
-        else BigDecimal(clampDecode(v, f, c.clampedScale).toJavaBigDecimal)
-      }
-      case RChar(_) | RVarchar(_) | RText | RJson | RXml => (rs, i) => rs.getString(i)
-      case RBinary | RFixedBinary(_) | RUuid | RGeometry => (rs, i) => rs.getBytes(i)
-      case RDate => (rs, i) => rs.getDate(i)
-      case RTime => (rs, i) => {
-        val v = rs.getTime(i)
-        if (v == null) null else v.toLocalTime.toNanoOfDay / 1000L
-      }
-      case RTimestampNtz => (rs, i) => {
-        val v = rs.getTimestamp(i); if (v == null) null else v.toLocalDateTime
-      }
-      case RTimestampTz => (rs, i) => rs.getTimestamp(i)
-      case RArray(elem) =>
-        val conv = externalElem(elem)
-        (rs, i) => {
-          val v = rs.getArray(i)
-          if (v == null) null
-          else sqlArrayElements(v).map(e => if (e == null) null else conv(e)).toSeq
-        }
-      case RStruct(fs) =>
-        val st = StructType(fs.map(f => StructField(f.name, f.tpe.toSpark, f.nullable)))
-        (rs, i) => {
-          val v = rs.getString(i)
-          if (v == null) null else JsonStructDecode.parseExternal(v, st)
-        }
-      case _ => (rs, i) => rs.getString(i)
-    }
-  }
-
-  /** External (Row-API) element conversion for the Transform path. */
-  private def externalElem(t: RemoteType): Any => Any = {
-    import RemoteType._
-    t match {
-      case RBool => identity
-      case RInt1 => v => v.asInstanceOf[Number].byteValue
-      case RInt2 | RUInt1 => v => v.asInstanceOf[Number].shortValue
-      case RInt4 | RUInt2 => v => v.asInstanceOf[Number].intValue
-      case RInt8 | RUInt4 => v => v.asInstanceOf[Number].longValue
-      case RFloat4 => v => v.asInstanceOf[Number].floatValue
-      case RFloat8 => v => v.asInstanceOf[Number].doubleValue
-      case RDecimal(p, s) if p <= DecimalType.MAX_PRECISION => {
-        case d: java.math.BigDecimal =>
-          BigDecimal(d.setScale(s, java.math.RoundingMode.HALF_UP))
-        case v => BigDecimal(v.toString).setScale(s, BigDecimal.RoundingMode.HALF_UP)
-      }
-      case RBinary | RFixedBinary(_) => identity
-      case RDate => identity
-      case _ => v => v.toString
     }
   }
 }

@@ -67,20 +67,17 @@ class RemoteMicroBatchStream(
   override def latestOffset(): Offset = {
     val from = opts.dialect.rewriteQuery(opts.source, pushedSql, None, None)
     val sql = s"SELECT MAX($q) FROM ($from) ${opts.dialect.subqueryAlias}W"
-    val conn = GraftConnections.open(opts)
-    try {
-      val st = conn.createStatement()
-      try {
-        val rs = st.executeQuery(sql)
-        val hi =
-          if (rs.next()) {
-            val v = rs.getLong(1)
-            if (rs.wasNull()) opts.streamingStart else v
-          } else opts.streamingStart
-        RemoteOffset(noteHigh(hi))
-      } finally st.close()
-    } finally GraftConnections.close(conn)
+    RemoteOffset(noteHigh(maxOf(sql, opts.streamingStart)))
   }
+
+  /** The value of a scalar `SELECT MAX(...)`, or `empty` when it is NULL. */
+  private def maxOf(sql: String, empty: Long): Long =
+    RemoteCursor.query(opts, sql) { rs =>
+      if (rs.next()) {
+        val v = rs.getLong(1)
+        if (rs.wasNull()) empty else v
+      } else empty
+    }
 
   /** Trigger.AvailableNow: the high-water mark is captured ONCE at
     * query start; every admitted batch caps at it, so the query drains
@@ -127,19 +124,7 @@ class RemoteMicroBatchStream(
           Seq(opts.dialect.sortClause(col, descending = false,
             nullsFirst = false)))
         val sql = s"SELECT MAX($q) FROM ($bounded) ${opts.dialect.subqueryAlias}B"
-        val conn = GraftConnections.open(opts)
-        try {
-          val st = conn.createStatement()
-          try {
-            val rs = st.executeQuery(sql)
-            val hi =
-              if (rs.next()) {
-                val v = rs.getLong(1)
-                if (rs.wasNull()) lo else v
-              } else lo
-            RemoteOffset(capped(noteHigh(hi)))
-          } finally st.close()
-        } finally GraftConnections.close(conn)
+        RemoteOffset(capped(noteHigh(maxOf(sql, lo))))
       case None => RemoteOffset(capped(trueLatest))
     }
   }

@@ -302,13 +302,6 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
     }
     pushedPreds = compiled.collect { case (p, Some(_)) => p }.toArray
     pushedSql = compiled.collect { case (_, Some(s)) => s }
-    if (sys.env.contains("GRAFT_DEBUG_PUSH"))
-      compiled.foreach { case (p, s) =>
-        // scalastyle:off println
-        println(s"GRAFT_PUSH: $p -> $s v1=${
-          org.apache.spark.sql.graftbridge.Bridge.predicateToV1(p)}")
-        // scalastyle:on println
-      }
     compiled.collect { case (p, None) => p }.toArray
   }
   override def pushedPredicates(): Array[
@@ -318,7 +311,7 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
     required = requiredSchema
 
   override def pushLimit(n: Int): Boolean = {
-    // never on top of a pushed aggregate: the agg reader renders its own
+    // never on top of a pushed aggregate: an aggregate scan renders its own
     // SQL and a silently-ignored "pushed" limit/sort would be a lie to
     // Catalyst (harmless for 1-row global aggs, wrong for GROUP BY rows)
     if (rewritable && agg.isEmpty) { limit = Some(n); true } else false
@@ -395,29 +388,22 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
     case _ => None
   }
 
-  /** Render one aggregate to remote SQL + its Spark result type (the
-    * scan schema must equal Spark's own aggregate output type, so SUM
-    * widens exactly the way Catalyst does). */
-  private def compileAgg(fn: AggregateFunc): Option[(String, DataType)] = fn match {
-    case _: CountStar => Some(("COUNT(1)", LongType))
+  /** Render one aggregate to remote SQL + the remote type its result
+    * decodes as (whose Spark type must equal Spark's own aggregate
+    * output type, so SUM widens exactly the way Catalyst does). */
+  private def compileAgg(fn: AggregateFunc): Option[(String, RemoteType)] = fn match {
+    case _: CountStar => Some(("COUNT(1)", RemoteType.RInt8))
     case c: Count if !c.isDistinct =>
-      aggColumn(c.column).map(n => (s"COUNT(${dialect.quote(n)})", LongType))
+      aggColumn(c.column).map(n =>
+        (s"COUNT(${dialect.quote(n)})", RemoteType.RInt8))
     case c: Count if c.isDistinct =>
       // exact remote COUNT(DISTINCT col): complete pushdown only, so the
       // remote engine's distinct set IS the final answer (a partial
       // distinct count cannot be merged)
       aggColumn(c.column).map(n =>
-        (s"COUNT(DISTINCT ${dialect.quote(n)})", LongType))
-    case m: Min =>
-      aggColumn(m.column).map { n =>
-        (s"MIN(${dialect.quote(n)})",
-          table.remoteSchema(n).tpe.toSpark)
-      }
-    case m: Max =>
-      aggColumn(m.column).map { n =>
-        (s"MAX(${dialect.quote(n)})",
-          table.remoteSchema(n).tpe.toSpark)
-      }
+        (s"COUNT(DISTINCT ${dialect.quote(n)})", RemoteType.RInt8))
+    case m: Min => aggColumn(m.column).flatMap(minMax("MIN", _))
+    case m: Max => aggColumn(m.column).flatMap(minMax("MAX", _))
     case s: Sum if !s.isDistinct =>
       import RemoteType._
       s.column match {
@@ -455,7 +441,7 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
                   val rp = dt.precision + 10
                   Some((s"CAST(SUM(CAST($q AS " +
                     s"DECIMAL(${dt.precision},${dt.scale}))) AS " +
-                    s"DECIMAL($rp,${dt.scale}))", DecimalType(rp, dt.scale)))
+                    s"DECIMAL($rp,${dt.scale}))", RDecimal(rp, dt.scale)))
                 }
               }
             case _ => None
@@ -465,12 +451,12 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
             val q = dialect.quote(n)
             table.remoteSchema(n).tpe match {
               case RInt1 | RInt2 | RInt4 | RInt8 | RUInt1 | RUInt2 | RUInt4 =>
-                Some((s"SUM(CAST($q AS BIGINT))", LongType))
+                Some((s"SUM(CAST($q AS BIGINT))", RInt8))
               case RFloat4 | RFloat8 =>
-                Some((s"SUM(CAST($q AS DOUBLE))", DoubleType))
+                Some((s"SUM(CAST($q AS DOUBLE))", RFloat8))
               case RDecimal(p, sc) if p + 10 <= DecimalType.MAX_PRECISION =>
                 Some((s"CAST(SUM($q) AS DECIMAL(${p + 10},$sc))",
-                  DecimalType(p + 10, sc)))
+                  RDecimal(p + 10, sc)))
               case _ => None
             }
           }
@@ -492,39 +478,39 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
           case RInt1 | RInt2 | RInt4 | RInt8 | RUInt1 | RUInt2 | RUInt4 =>
             Some((s"CASE WHEN COUNT($q) = 0 THEN NULL ELSE " +
               s"CAST(CAST(SUM(CAST($q AS BIGINT)) AS DOUBLE) / COUNT($q) " +
-              s"AS DOUBLE) END", DoubleType))
+              s"AS DOUBLE) END", RFloat8))
           case _ => None
         }
       }
     case _ => None
   }
 
+  /** MIN/MAX keep the column's remote type. Nested columns decline: the
+    * remote would order their JSON or array text, not Spark's struct
+    * and array order. */
+  private def minMax(fn: String, n: String): Option[(String, RemoteType)] =
+    table.remoteSchema(n).tpe match {
+      case RemoteType.RStruct(_) | RemoteType.RArray(_) => None
+      case t => Some((s"$fn(${dialect.quote(n)})", t))
+    }
+
   /** A GROUP BY column is pushable when it resolves to a remote column
-    * whose Spark type the agg reader can decode scalar-wise. */
+    * of a scalar Spark type. */
   private def compileGroupCol(
       e: org.apache.spark.sql.connector.expressions.Expression)
-      : Option[(String, StructField)] =
+      : Option[(String, RemoteField)] =
     aggColumn(e).flatMap { n =>
       val f = table.remoteSchema(n)
       f.tpe.toSpark match {
         case LongType | IntegerType | ShortType | ByteType | DoubleType |
              FloatType | StringType | DateType | TimestampNTZType |
              BooleanType | _: DecimalType =>
-          Some((dialect.quote(n), StructField(n, f.tpe.toSpark, f.nullable)))
+          Some((dialect.quote(n), RemoteField(n, f.tpe, f.nullable)))
         case _ => None // arrays/binary/etc: grouping stays Spark-side
       }
     }
 
-  private def debugAgg(aggregation: Aggregation): Unit =
-    if (sys.env.contains("GRAFT_DEBUG_PUSH")) {
-      // scalastyle:off println
-      aggregation.aggregateExpressions.foreach(a =>
-        println(s"GRAFT_AGG: $a (${a.getClass.getName}) -> ${compileAgg(a)}"))
-      // scalastyle:on println
-    }
-
   override def supportCompletePushDown(aggregation: Aggregation): Boolean = {
-    debugAgg(aggregation)
     // single-partition scans only: complete pushdown means Spark takes
     // our rows as the final aggregate result (with GROUP BY, one remote
     // result row per group — the remote engine's grouping IS the final
@@ -541,12 +527,9 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
     val compiled = aggregation.aggregateExpressions.toSeq.map(compileAgg(_).get)
     // scan output = grouping columns then aggregates, positionally —
     // the DSv2 complete-pushdown contract
-    val schema = StructType(groups.map(_._2) ++
-      compiled.zipWithIndex.map { case ((_, dt), i) =>
-        StructField(s"agg_$i", dt, nullable = true)
-      })
     agg = Some(PushedAgg(groups.map(_._1) ++ compiled.map(_._1),
-      groups.map(_._1), schema))
+      groups.map(_._1), groups.map(_._2) ++
+        compiled.zipWithIndex.map { case ((_, t), i) => RemoteField(s"agg_$i", t) }))
     true
   }
 
@@ -654,11 +637,15 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
 
 /** A pushed-down (complete) aggregate: the rendered SELECT list
   * (grouping columns first, then aggregates), the GROUP BY column list,
-  * and the Spark schema of the result rows. */
+  * and the result columns with their remote types — the remote
+  * `SELECT [g1,] agg1 ... [GROUP BY g1]` rows ARE the scan output, and
+  * the row reader decodes them like any other scan's rows. */
 final case class PushedAgg(
     select: Seq[String],
     groupBy: Seq[String],
-    schema: StructType)
+    fields: Seq[RemoteField]) {
+  def schema: StructType = RemoteSchema(fields).toSpark
+}
 
 /** Input split: optional extra range predicate for parallel reads,
   * plus any execution-time runtime filters (broadcast-join IN lists).
@@ -785,17 +772,11 @@ class RemoteScan(
           else pushedSql.mkString(" WHERE (", ") AND (", ")")
         val sql = s"SELECT MIN($q), MAX($q) FROM " +
           s"${opts.dialect.fromClause(opts.source)}$where"
-        GraftConnections.withConnection(opts) { conn =>
-          val st = conn.createStatement()
-          try {
-            val rs = st.executeQuery(sql)
-            try {
-              rs.next()
-              val lo = rs.getLong(1); val loNull = rs.wasNull()
-              val hi = rs.getLong(2); val hiNull = rs.wasNull()
-              if (loNull || hiNull) None else Some((lo, hi))
-            } finally rs.close()
-          } finally st.close()
+        RemoteCursor.query(opts, sql) { rs =>
+          rs.next()
+          val lo = rs.getLong(1); val loNull = rs.wasNull()
+          val hi = rs.getLong(2); val hiNull = rs.wasNull()
+          if (loNull || hiNull) None else Some((lo, hi))
         }
       } catch {
         case e: Exception =>
@@ -883,6 +864,26 @@ class RemoteScan(
   override def estimateStatistics(): Statistics = stats
 }
 
+object RemoteScan {
+  /** The SQL one partition runs, rendered for the partition readers and
+    * for [[ScanCodec.execute]] alike: the rewritten source query, or —
+    * when `aggSelect` is non-empty — the pushed aggregate over the
+    * filtered source. */
+  def partitionSql(dialect: Dialect, source: RemoteSource,
+      filters: Seq[String], columns: Option[Seq[String]], limit: Option[Int],
+      sortSql: Seq[String], offset: Option[Int], aggSelect: Seq[String],
+      aggGroupBy: Seq[String]): String =
+    if (aggSelect.isEmpty)
+      dialect.rewriteQuery(source, filters, limit, columns, sortSql, offset)
+    else {
+      val from = dialect.rewriteQuery(source, filters, None, None)
+      val group =
+        if (aggGroupBy.isEmpty) "" else aggGroupBy.mkString(" GROUP BY ", ", ", "")
+      s"SELECT ${aggSelect.mkString(", ")} " +
+        s"FROM ($from) ${dialect.subqueryAlias}A$group"
+    }
+}
+
 class RemoteReaderFactory(
     opts: RemoteOptions,
     remoteSchema: RemoteSchema,
@@ -896,21 +897,27 @@ class RemoteReaderFactory(
     isCommand: Boolean)
   extends PartitionReaderFactory {
 
+  private def requiredFields: Seq[RemoteField] =
+    required.fields.toSeq.map(f => remoteSchema(f.name))
+
+  private def sql(part: RemotePartition, columns: Option[Seq[String]]): String =
+    RemoteScan.partitionSql(opts.dialect, opts.source,
+      pushedSql ++ part.rangePredicate ++ part.runtimeSql, columns, limit,
+      sortSql, offset, agg.toSeq.flatMap(_.select), agg.toSeq.flatMap(_.groupBy))
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val part = partition.asInstanceOf[RemotePartition]
-    val filters = pushedSql ++ part.rangePredicate ++ part.runtimeSql
     if (isCommand) {
       if (opts.command.contains("pool_state")) new PoolStateReader(opts)
       else new ListTablesReader(opts)
     } else agg match {
-      case Some(a) =>
-        new AggPushdownReader(opts, a, filters)
+      case Some(a) => new RemoteRowReader(opts, sql(part, None), a.fields, a.schema)
       case None if opts.transformClass.isEmpty =>
-        new FastRowReader(opts, remoteSchema, required, filters, limit,
-          sortSql, offset)
+        new RemoteRowReader(opts, sql(part, Some(requiredFields.map(_.name))),
+          requiredFields, required)
       case None =>
-        new TransformRowReader(opts, remoteSchema, transformedSchema,
-          required, filters, limit, sortSql, offset)
+        new TransformRowReader(opts, sql(part, None), remoteSchema,
+          transformedSchema, required)
     }
   }
 
@@ -920,17 +927,13 @@ class RemoteReaderFactory(
     * Transform contract hands user code a row iterator. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     opts.columnarRead && !isCommand && agg.isEmpty &&
-      opts.transformClass.isEmpty &&
-      Jdbc.columnarSupported(
-        required.fields.toSeq.map(f => remoteSchema(f.name)))
+      opts.transformClass.isEmpty && Jdbc.columnarSupported(requiredFields)
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val part = partition.asInstanceOf[RemotePartition]
-    new ColumnarRemoteReader(opts, remoteSchema, required,
-      pushedSql ++ part.rangePredicate ++ part.runtimeSql,
-      limit, sortSql, offset)
-  }
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new ColumnarRemoteReader(opts,
+      sql(partition.asInstanceOf[RemotePartition], Some(requiredFields.map(_.name))),
+      requiredFields, required)
 }
 
 /** Columnar no-transform scan: decode the JDBC cursor straight into
@@ -942,30 +945,20 @@ class RemoteReaderFactory(
   * `RecordBatch`es (`connection/mod.rs` decode layer). */
 class ColumnarRemoteReader(
     opts: RemoteOptions,
-    remoteSchema: RemoteSchema,
-    required: StructType,
-    filters: Seq[String],
-    limit: Option[Int],
-    sortSql: Seq[String] = Nil,
-    offset: Option[Int] = None)
+    sql: String,
+    fields: Seq[RemoteField],
+    schema: StructType)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  private val requiredFields: Seq[RemoteField] =
-    required.fields.toSeq.map(f => remoteSchema(f.name))
-  private val conn = GraftConnections.open(opts)
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(opts.fetchSize)
-  private val sql = opts.dialect.rewriteQuery(opts.source, filters, limit,
-    Some(requiredFields.map(_.name)), sortSql, offset)
-  ScanSqlLog.record(sql)
-  private val rs = stmt.executeQuery(sql)
-  private val setters = requiredFields.map(Jdbc.columnarSetter).toArray
-  private val width = requiredFields.length
+  private val setters = fields.map(Jdbc.columnarSetter).toArray
+  private val width = fields.length
   private val capacity = math.max(1, opts.columnarBatchSize)
   private val vectors = org.apache.spark.sql.execution.vectorized
-    .OnHeapColumnVector.allocateColumns(capacity, required)
+    .OnHeapColumnVector.allocateColumns(capacity, schema)
   private val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(
     vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
+  private val cursor = new RemoteCursor(opts, sql)
+  private val rs = cursor.rs
   private var exhausted = false
 
   override def next(): Boolean = {
@@ -985,39 +978,28 @@ class ColumnarRemoteReader(
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
 
-  override def close(): Unit = {
-    try { batch.close(); rs.close(); stmt.close() }
-    finally GraftConnections.close(conn)
-  }
+  override def close(): Unit = try batch.close() finally cursor.close()
 }
 
-/** No-transform path: SELECT only the pruned columns, decode straight
-  * to InternalRow (reference O1 + decode-side O2, but with the SELECT
-  * list rewritten as SURVEY §2.1 recommends). */
-class FastRowReader(
+/** Row scan: decode each remote row straight to an InternalRow. Serves
+  * plain scans the columnar path does not (struct/array columns,
+  * `columnarread=false`; SELECT list rewritten to the pruned columns as
+  * SURVEY §2.1 recommends) and pushed aggregates, whose result columns
+  * decode by their remote types like any other. */
+class RemoteRowReader(
     opts: RemoteOptions,
-    remoteSchema: RemoteSchema,
-    required: StructType,
-    filters: Seq[String],
-    limit: Option[Int],
-    sortSql: Seq[String] = Nil,
-    offset: Option[Int] = None)
+    sql: String,
+    fields: Seq[RemoteField],
+    schema: StructType)
   extends PartitionReader[InternalRow] {
 
-  private val requiredFields: Seq[RemoteField] =
-    required.fields.toSeq.map(f => remoteSchema(f.name))
-  private val conn = GraftConnections.open(opts)
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(opts.fetchSize)
-  private val sql = opts.dialect.rewriteQuery(opts.source, filters, limit,
-    Some(requiredFields.map(_.name)), sortSql, offset)
-  ScanSqlLog.record(sql)
-  private val rs = stmt.executeQuery(sql)
-  // required-typed getters: struct columns decode against the pruned shape
-  private val getters = requiredFields.zip(required.fields).map {
-    case (rf, sf) => Jdbc.catalystGetter(rf, sf.dataType)
-  }
-  private val width = requiredFields.length
+  // schema-typed getters: struct columns decode against the pruned shape
+  private val getters = fields.zip(schema.fields).map {
+    case (f, sf) => Jdbc.catalystGetter(f, sf.dataType)
+  }.toArray
+  private val width = getters.length
+  private val cursor = new RemoteCursor(opts, sql)
+  private val rs = cursor.rs
 
   override def next(): Boolean = rs.next()
 
@@ -1028,9 +1010,7 @@ class FastRowReader(
     new GenericInternalRow(arr)
   }
 
-  override def close(): Unit = {
-    try { rs.close(); stmt.close() } finally GraftConnections.close(conn)
-  }
+  override def close(): Unit = cursor.close()
 }
 
 /** Transform path: fetch ALL raw columns (the transform may read any of
@@ -1040,24 +1020,16 @@ class FastRowReader(
   * `transform.rs:143-150`). */
 class TransformRowReader(
     opts: RemoteOptions,
+    sql: String,
     remoteSchema: RemoteSchema,
     transformedSchema: StructType,
-    required: StructType,
-    filters: Seq[String],
-    limit: Option[Int],
-    sortSql: Seq[String] = Nil,
-    offset: Option[Int] = None)
+    required: StructType)
   extends PartitionReader[InternalRow] {
 
-  private val conn = GraftConnections.open(opts)
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(opts.fetchSize)
-  private val sql = opts.dialect.rewriteQuery(opts.source, filters, limit, None,
-    sortSql, offset)
-  private val rs = stmt.executeQuery(sql)
-  private val getters = remoteSchema.fields.map(Jdbc.externalGetter)
-  private val rawWidth = remoteSchema.fields.length
+  private val decode = TransformRowReader.rowDecoder(remoteSchema)
   private val rawSchema = remoteSchema.toSpark
+  private val cursor = new RemoteCursor(opts, sql)
+  private val rs = cursor.rs
 
   /** The raw-row iterator handed to the user Transform. `hasNext` must be
     * idempotent (user code may legally call it more than once per `next()` —
@@ -1074,10 +1046,7 @@ class TransformRowReader(
       def next(): org.apache.spark.sql.Row = {
         if (!hasNext) throw new NoSuchElementException("next on empty remote cursor")
         advanced = false
-        val arr = new Array[Any](rawWidth)
-        var i = 0
-        while (i < rawWidth) { arr(i) = getters(i)(rs, i + 1); i += 1 }
-        org.apache.spark.sql.Row.fromSeq(arr.toIndexedSeq)
+        decode(rs)
       }
     }
 
@@ -1097,74 +1066,21 @@ class TransformRowReader(
   override def next(): Boolean =
     if (out.hasNext) { current = out.next(); true } else false
   override def get(): InternalRow = current
-  override def close(): Unit = {
-    try { rs.close(); stmt.close() } finally GraftConnections.close(conn)
-  }
+  override def close(): Unit = cursor.close()
 }
 
-/** Complete aggregate pushdown: the remote `SELECT [g1, g2,] agg1 ...
-  * [GROUP BY g1, g2]` rows ARE the scan output (Spark plans no
-  * re-aggregation) — one row for a global aggregate, one row per group
-  * with GROUP BY. Only group rows cross the wire, never input rows. */
-class AggPushdownReader(
-    opts: RemoteOptions,
-    pushedAgg: PushedAgg,
-    filters: Seq[String])
-  extends PartitionReader[InternalRow] {
-
-  private val schema = pushedAgg.schema
-  private val conn = GraftConnections.open(opts)
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(opts.fetchSize)
-  private val from = opts.dialect.rewriteQuery(opts.source, filters, None, None)
-  private val groupSql =
-    if (pushedAgg.groupBy.isEmpty) ""
-    else pushedAgg.groupBy.mkString(" GROUP BY ", ", ", "")
-  private val sql = s"SELECT ${pushedAgg.select.mkString(", ")} " +
-    s"FROM ($from) ${opts.dialect.subqueryAlias}A$groupSql"
-  ScanSqlLog.record(sql)
-  private val rs = stmt.executeQuery(sql)
-
-  override def next(): Boolean = rs.next()
-
-  override def get(): InternalRow = {
-    val arr: Array[Any] = schema.fields.zipWithIndex.map { case (f, i) =>
-      f.dataType match {
-        case LongType => val v = rs.getLong(i + 1); if (rs.wasNull()) null else v
-        case IntegerType => val v = rs.getInt(i + 1); if (rs.wasNull()) null else v
-        case ShortType => val v = rs.getShort(i + 1); if (rs.wasNull()) null else v
-        case ByteType => val v = rs.getByte(i + 1); if (rs.wasNull()) null else v
-        case BooleanType =>
-          val v = rs.getBoolean(i + 1); if (rs.wasNull()) null else v
-        case DoubleType => val v = rs.getDouble(i + 1); if (rs.wasNull()) null else v
-        case FloatType => val v = rs.getFloat(i + 1); if (rs.wasNull()) null else v
-        case d: DecimalType =>
-          val v = rs.getBigDecimal(i + 1)
-          if (v == null) null
-          else Decimal(BigDecimal(v.setScale(d.scale, java.math.RoundingMode.HALF_UP)),
-            d.precision, d.scale)
-        case StringType =>
-          val v = rs.getString(i + 1)
-          if (v == null) null else UTF8String.fromString(v)
-        case DateType =>
-          val v = rs.getDate(i + 1)
-          if (v == null) null
-          else org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(v)
-        case TimestampNTZType =>
-          val v = rs.getTimestamp(i + 1)
-          if (v == null) null
-          else org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .localDateTimeToMicros(v.toLocalDateTime)
-        case _ =>
-          val v = rs.getString(i + 1)
-          if (v == null) null else UTF8String.fromString(v)
-      }
-    }
-    new GenericInternalRow(arr)
-  }
-
-  override def close(): Unit = {
-    try { rs.close(); stmt.close() } finally GraftConnections.close(conn)
+object TransformRowReader {
+  /** The Transform path's decode: the row reader's Catalyst getters, then
+    * Spark's own Catalyst → Row-API conversion, so user code gets the
+    * value types [[Transform]] documents. */
+  private[sources] def rowDecoder(remoteSchema: RemoteSchema)
+      : java.sql.ResultSet => org.apache.spark.sql.Row = {
+    val getters =
+      remoteSchema.fields.map(f => Jdbc.catalystGetter(f, f.tpe.toSpark)).toArray
+    val toRow = CatalystTypeConverters.createToScalaConverter(remoteSchema.toSpark)
+    rs => toRow(new GenericInternalRow(
+      Array.tabulate[Any](getters.length)(i => getters(i)(rs, i + 1))))
+      .asInstanceOf[org.apache.spark.sql.Row]
   }
 }
 

@@ -76,12 +76,10 @@ object ScanCodec {
   }
 
   /** Re-execute a decoded scan: render the SAME remote SQL the
-    * original scan's partition readers would (the agg reader's
-    * subquery shape for pushed aggregates; `rewriteQuery` with the
-    * pruned SELECT list otherwise) and run it through the connector's
-    * `query` source. The result is cast to the encoded schema so the
-    * round trip is schema-identical even where remote type inference
-    * widens (e.g. COUNT's BIGINT). */
+    * original scan's partition readers would ([[RemoteScan.partitionSql]])
+    * and run it through the connector's `query` source. The result is
+    * cast to the encoded schema so the round trip is schema-identical
+    * even where remote type inference widens (e.g. COUNT's BIGINT). */
   def execute(spark: SparkSession, st: ScanState): DataFrame = {
     require(st.version == Version,
       s"ScanCodec.execute: unsupported version ${st.version}")
@@ -95,23 +93,16 @@ object ScanCodec {
     }
     val schema = StructType.fromDDL(
       st.aggSchemaDdl.getOrElse(st.readSchemaDdl))
-    val sql =
-      if (st.aggSchemaDdl.isDefined) {
-        val from = dialect.rewriteQuery(src, st.pushedFilters, None, None)
-        val group =
-          if (st.aggGroupBy.isEmpty) ""
-          else st.aggGroupBy.mkString(" GROUP BY ", ", ", "")
-        // alias every select item with the encoded result-schema name:
-        // the replay reads THROUGH the connector's query source, whose
-        // schema inference needs stable column names (a bare COUNT(*)
-        // would surface as the remote's positional auto-name)
-        val sel = st.aggSelect.zip(schema.fieldNames).map {
-          case (s, n) => s"$s AS ${dialect.quote(n)}"
-        }
-        s"SELECT ${sel.mkString(", ")} " +
-          s"FROM ($from) ${dialect.subqueryAlias}A$group"
-      } else dialect.rewriteQuery(src, st.pushedFilters, st.limit,
-        Some(schema.fieldNames.toSeq), st.sortOrder, st.offset)
+    // alias every aggregate select item with the encoded result-schema
+    // name: the replay reads THROUGH the connector's query source, whose
+    // schema inference needs stable column names (a bare COUNT(*) would
+    // surface as the remote's positional auto-name)
+    val aggSelect = st.aggSelect.zip(schema.fieldNames).map {
+      case (s, n) => s"$s AS ${dialect.quote(n)}"
+    }
+    val sql = RemoteScan.partitionSql(dialect, src, st.pushedFilters,
+      Some(schema.fieldNames.toSeq), st.limit, st.sortOrder, st.offset,
+      aggSelect, st.aggGroupBy)
     var r = spark.read.format("graft-remote")
     (st.options - "dbtable" - "query" + ("query" -> sql)).foreach {
       case (k, v) => r = r.option(k, v)

@@ -30,6 +30,13 @@ import org.apache.spark.sql.types.StructType
   * them — so a transform that changes a column's values while keeping its
   * name must opt IN to pushdown explicitly, not remember to opt out.
   *
+  * VALUES: the rows handed to [[transform]] carry Spark's Row-API types
+  * for the raw schema (Spark's own `CatalystTypeConverters` produce
+  * them): DECIMAL is `java.math.BigDecimal`, so `Row.getDecimal` works;
+  * TIME is µs-since-midnight `Long`; TIMESTAMP (NTZ) is
+  * `java.time.LocalDateTime`; strings are `String`, arrays `Seq`, and
+  * `structcol` columns `Row`.
+  *
   * Implementations must have a no-arg constructor (instantiated from
   * the option map on executors) and be pure row-level functions —
   * they run once per partition per task.

@@ -117,9 +117,9 @@ class Round2FixSpec extends AnyFunSuite {
       }).asInstanceOf[java.sql.Array]
     val arr = Jdbc.catalystGetter(f)(fakeRs(prim), 1).asInstanceOf[ArrayData]
     assert(arr.toIntArray().toSeq == Seq(7, 8, 9))
-    // external (Transform) path sees plain Scala values
-    val ext = Jdbc.externalGetter(f)(fakeRs(prim), 1)
-    assert(ext == Seq(7, 8, 9))
+    // the Transform path's decode hands user code a plain Seq
+    val ext = TransformRowReader.rowDecoder(RemoteSchema(Seq(f)))(fakeRs(prim))
+    assert(ext.get(0) == Seq(7, 8, 9))
   }
 
   test("ARRAY decode: null column value decodes to null") {
